@@ -17,6 +17,11 @@ Scale design:
     skew AQE's skew-join handling splits;
   - exact verification runs only on candidate pairs (LSH output), never
     on the full cross product.
+
+One pair-generation body per near-dup method: n-gram Jaccard, MinHash
+and SimHash each run their delta-vs-corpus probe (pairs touching the
+delta only), and the self-join is that same probe with no corpus —
+every doc sits on the delta side, so every pair touches the delta.
 """
 
 from __future__ import annotations
@@ -97,22 +102,6 @@ def _prefix_shj_parts(
     )
 
 
-# _spread's width-probe memo (round-13 verdict #7): keyed by
-# (applicationId, analyzed-plan semanticHash) → the probed partition
-# count. The probe (`df.rdd.getNumPartitions()`) runs full physical
-# planning (~50 ms per shingle/token operator invocation); repeated
-# invocations of the same operator over the same relation — every
-# bench rep, every nightly re-run in a live session — rebuild a
-# semantically identical plan, so the memoized width is the same
-# number the probe would return (same files, same session read confs).
-# semanticHash needs only analysis, not planning. A collision can only
-# mis-steer the WIDTH HEURISTIC (repartition-or-not) — plan choice,
-# never results. applicationId in the key drops entries with the
-# SparkContext (the _SCAN_CACHE discipline); bounded oldest-out.
-_SPREAD_MEMO: dict[tuple[str, int], int] = {}
-_SPREAD_MEMO_MAX = 256
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the cluster's default parallelism —
     only when the input is narrower than the cluster.
@@ -125,14 +114,7 @@ def _spread(df: DataFrame) -> DataFrame:
     corpus-wide shuffle.
     """
     sc = df.sparkSession.sparkContext
-    key = (sc.applicationId, df.semanticHash())
-    parts = _SPREAD_MEMO.get(key)
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        while len(_SPREAD_MEMO) >= _SPREAD_MEMO_MAX:
-            _SPREAD_MEMO.pop(next(iter(_SPREAD_MEMO)))
-        _SPREAD_MEMO[key] = parts
-    if parts >= sc.defaultParallelism:
+    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
     return df.repartition(sc.defaultParallelism)
 
@@ -363,56 +345,23 @@ def shingles(
     )
 
 
-def _pair_jaccard(sh: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
-    """Jaccard for doc pairs sharing ≥1 shingle (inverted-index join).
+def _delta_pair(x: str, y: str, d: str) -> F.Column:
+    """Join filter of the delta probes (delta side ``x`` against the
+    union side ``y``, whose ``d`` flags delta rows): each pair touching
+    the delta passes once — delta-delta once via x<y, delta-corpus once
+    by disjointness (ids are side-disjoint by contract). With no corpus
+    every row is a delta row and this is the self-join's x<y."""
+    return (F.col(x) != F.col(y)) & (~F.col(d) | (F.col(x) < F.col(y)))
 
-    ``pairs`` (doc_a, doc_b) optionally restricts to candidate pairs.
-    PRECONDITION: ``pairs`` must be distinct and canonical (doc_a <
-    doc_b) — a duplicate pair row would multiply its ``inter`` count
-    and inflate Jaccard past 1 (the pair-anchored join counts one row
-    per (pair row, shared shingle)). Both callers pass ``.distinct()``
-    canonical pairs.
-    """
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    if pairs is not None:
-        # Candidate pairs are known up front: anchor the intersection on
-        # the pair list instead of expanding the inverted index and
-        # filtering after. Cost is Σ|shingles(doc_a)| over pairs — linear
-        # in candidate volume — where the index expansion is quadratic in
-        # per-shingle document frequency among candidate docs (hot
-        # shingles shared by many near-dups blow it up exactly when LSH
-        # finds many candidates).
-        inter = (
-            pairs.join(_wide_by(sh, "id").select(F.col("id").alias("doc_a"), "shingle"), ["doc_a"])
-            .join(sh.select(F.col("id").alias("doc_b"), "shingle"), ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        # pair expansion is the hot stage — run it at cluster width even
-        # when the session's shuffle sizing collapsed reduces to 1 partition
-        sh_w = _wide_by(sh, "shingle")
-        a = sh_w.select(F.col("id").alias("doc_a"), "shingle")
-        b = sh_w.select(F.col("id").alias("doc_b"), "shingle")
-        inter = (
-            a.join(b, ["shingle"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    return (
-        inter.join(sizes.select(F.col("id").alias("doc_a"), F.col("n").alias("na")), ["doc_a"])
-        .join(sizes.select(F.col("id").alias("doc_b"), F.col("n").alias("nb")), ["doc_b"])
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+
+def _jaccard(inter: str) -> F.Column:
+    """Exact Jaccard from a pair's intersection count and its two set
+    sizes (``na``/``nb``), rounded to 6 places like the DuckDB oracle."""
+    return F.round(
+        F.col(inter).cast("double")
+        / (F.col("na") + F.col("nb") - F.col(inter)),
+        6,
+    ).alias("jaccard")
 
 
 def _pair_jaccard_arrays(
@@ -426,6 +375,12 @@ def _pair_jaccard_arrays(
     pair-anchored form pushed one row per (pair, shared shingle)
     through a groupBy that spilled at corpus scale.
 
+    Anchoring on the known pair list (instead of expanding an inverted
+    index and filtering after) makes the cost linear in candidate
+    volume, where the index expansion is quadratic in per-shingle
+    document frequency among candidate docs (hot shingles shared by
+    many near-dups blow it up exactly when LSH finds many candidates).
+
     ``min_parts`` floors the join width: the hinted SHJ build (the
     array side) cannot spill, and at 5M docs the candidate arrays over
     the session's 32 input-sized partitions aborted the hash build
@@ -435,9 +390,9 @@ def _pair_jaccard_arrays(
     the exchanges EnsureRequirements would insert, wider — never an
     extra shuffle.
 
-    PRECONDITION (same as _pair_jaccard): ``pairs`` distinct and
-    canonical (doc_a < doc_b). Pairs whose doc is absent from ``arrs``
-    drop out (inner joins), matching the exploded form.
+    PRECONDITION: ``pairs`` distinct and canonical (doc_a < doc_b) —
+    a duplicate pair row comes out twice. Pairs whose doc is absent
+    from ``arrs`` drop out (inner joins), matching the exploded form.
     """
     a = arrs.select(
         F.col("id").alias("doc_a"),
@@ -463,15 +418,7 @@ def _pair_jaccard_arrays(
         # CollapseProject keeps non-cheap aliases used more than once,
         # so array_intersect evaluates once per pair
         .select("doc_a", "doc_b", inter.alias("i"), "na", "nb")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard("i"))
     )
 
 
@@ -479,7 +426,7 @@ def _rescore_candidates(
     base: DataFrame, pairs: DataFrame, base_shingles: int | None = None
 ) -> DataFrame:
     """Exact rescore of a candidate shortlist with ZERO inverted-index
-    passes. ``base``: the per-doc array relation (id, g, n>0);
+    passes. ``base``: the per-doc array relation (id, g);
     ``pairs``: a CHECKPOINTED canonical shortlist (doc_a, doc_b, na,
     nb). Two plans with identical output, chosen by the measured
     shingle volume of the candidate docs (one tiny aggregate over the
@@ -546,15 +493,7 @@ def _rescore_candidates(
             # CollapseProject keeps non-cheap aliases used more than
             # once, so array_intersect evaluates once per pair
             .select("doc_a", "doc_b", inter.alias("i"), "na", "nb")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(
-                    F.col("i").cast("double")
-                    / (F.col("na") + F.col("nb") - F.col("i")),
-                    6,
-                ).alias("jaccard"),
-            )
+            .select("doc_a", "doc_b", _jaccard("i"))
         )
     # corpus-scale shortlists: same per-pair array_intersect as the
     # broadcast plan, but the array payloads arrive by shuffle join
@@ -707,7 +646,7 @@ def ngram_jaccard_pairs(
     pair sharing at least one shingle is enumerated (the oracle twin
     of the DuckDB SQL; the shuffle key is the shingle, so hot shingles
     are the skew point). ``max_df`` set: the scale path — PREFIX-
-    FILTERED self-join (see inline comments) that indexes only each
+    FILTERED join (see inline comments) that indexes only each
     doc's ⌊(1-t)·|d|⌋+1 smallest shingle hashes for candidate
     generation (exact by the prefix principle) with ``max_df`` as a
     residual hot-key valve, then rescores candidates over full shingle
@@ -728,7 +667,8 @@ def ngram_jaccard_pairs(
     with the persisted prefix_df/hp0 aggregates the probe never
     touches corpus text at all (``against`` may then be omitted) and
     skips the two corpus-wide statistic shuffles — see
-    ``_ngram_jaccard_pairs_delta``.
+    ``_ngram_jaccard_pairs_delta``. Without a corpus the same body
+    runs with every doc on the delta side: that IS the self-join.
 
     ``arrays`` (capped self-join only): a CHECKPOINTED
     ``shingle_arrays(df, text_col, id_col, n)`` relation the caller
@@ -740,13 +680,14 @@ def ngram_jaccard_pairs(
     these exact (text_col, id_col, n) over this exact ``df``, and owns
     the checkpoint's release.
     """
+    delta = against is not None or against_state is not None
     if arrays is not None:
         # fail loudly where the parameter would be silently ignored
         # (round-13 ADVICE): the delta form takes the corpus relation
         # via against_arrays=/against_state=, and the uncapped path is
         # the STRING-shingle oracle-exact reference — hashed arrays
         # cannot feed it.
-        if against is not None or against_state is not None:
+        if delta:
             raise ValueError(
                 "arrays= applies to the capped self-join only; the "
                 "delta form takes the corpus relation via "
@@ -759,220 +700,9 @@ def ngram_jaccard_pairs(
                 "would ignore a hashed-array relation"
             )
         _check_arrays_contract(arrays, text_col, id_col, n)
-    if against is not None or against_state is not None:
-        return _ngram_jaccard_pairs_delta(
-            df, against, text_col, id_col, n, threshold, max_df,
-            against_arrays, against_state,
-        )
-    if max_df is None:
-        # the self-join + sizes reuse sh 3×; materialize the explode
-        # once — STRING shingles here: the uncapped path is the
-        # oracle-exact reference the hashed paths are pinned against
-        sh = shingles(df, text_col, id_col, n).localCheckpoint(eager=True)
-        return (
-            _pair_jaccard(sh)
-            .filter(F.col("jaccard") >= threshold)
-            .orderBy("doc_a", "doc_b", "jaccard")
-        )
-    else:
-        # PREFIX-FILTERED set-similarity self-join (exact; the prefix
-        # principle of the public set-similarity-join literature,
-        # PPJoin-family): J(A,B) ≥ t implies |A∩B| ≥ ⌈t·|A|⌉ and
-        # ⌈t·|B|⌉, so under ANY shared global total order on shingles
-        # the two docs' (⌊(1-t)·|d|⌋+1)-prefixes of their sorted
-        # shingle sets must intersect. Candidate generation therefore
-        # indexes ONLY the prefix — ~(1-t) of each doc's shingles, 20%
-        # at t=0.8 — cutting the self-join pair blow-up by ~(1-t)²
-        # (≈25×) versus the full inverted index, at recall 1.0.
-        # The global order is the int64 shingle-hash order itself: it
-        # costs zero extra shuffles (one codegen array_sort per doc at
-        # materialization), where the literature's df-ascending order
-        # would need a document-frequency join plus a per-doc re-sort
-        # (two extra full-relation shuffles) to prune somewhat harder.
-        # All consumers read the one checkpointed array relation.
-        if arrays is None:
-            arrays = ck_shingle_arrays(df, text_col, id_col, n)
-        arr = _arr_df(arrays)
-        arr_stats = _arr_stats(arrays)
-        base = arr.select("id", "g", F.size("g").alias("n")).filter(
-            F.col("n") > 0
-        )
-        plen = (F.floor(F.lit(1.0 - threshold) * F.col("n")) + 1).cast("int")
-        # posexplode: the 1-based prefix position feeds the positional
-        # filter below (positions along the sorted array are monotone
-        # in the global shingle order)
-        pre = base.select(
-            "id",
-            "n",
-            F.posexplode(F.slice("g", F.lit(1), plen)).alias("pos", "shingle"),
-        ).withColumn("pos", F.col("pos") + 1)
-        # max_df stays as the residual hot-key valve ON TOP of prefix
-        # filtering: a shingle hot even within the prefix index (>
-        # max_df prefix entries — ~(1-t)·df, so the valve engages ~5×
-        # later than the round-2..4 full-index cap) is dropped from
-        # candidate generation, bounding the hottest join key at
-        # max_df². A pair is missed only if EVERY shared prefix shingle
-        # is hot; the capped==uncapped pin and the driver's uncapped
-        # DuckDB oracle hold. The hot set is small by construction
-        # (≤ prefix_rows/max_df) and applied as a broadcast anti-join
-        # INSIDE the candidate job — a driver-side InSet probe was
-        # measured slower here: its blocking collect adds a whole extra
-        # job per invocation, ~0.4 s of the sf0.1 budget.
-        hot = (
-            pre.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        cold = pre.join(F.broadcast(hot), ["shingle"], "left_anti")
-        # per-doc hot-prefix-entry counts: the positional bound below is
-        # computed over COLD matches only, so shared HOT prefix shingles
-        # (boilerplate common to a whole near-dup cluster) would be
-        # counted in neither cp nor the tails — the bound must carry a
-        # + min(hp_a, hp_b) correction or it undercounts and prunes
-        # true near-dups (pinned by the hot-boilerplate cluster test).
-        # Docs-with-hot-entries sized; joined unhinted (AQE broadcasts
-        # it when small, and an adversarial all-docs-share-boilerplate
-        # corpus would blow a forced broadcast).
-        hp = (
-            pre.join(F.broadcast(hot), ["shingle"], "left_semi")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("hp"))
-        )
-        # prefix self-join, exchange floored by the SHJ build's bytes
-        # (the build side is the whole cold prefix relation — at 5M
-        # docs, 32 input-sized partitions aborted the unspillable hash
-        # build); the size-ratio prune (exact: J ≥ t ⇒
-        # min(na,nb)/max(na,nb) ≥ t) runs inside the join, before the
-        # distinct ever sees the blow-up
-        side = _wide_by(
-            cold, "shingle",
-            min_parts=_prefix_shj_parts(arr, threshold, arr_stats),
-        )
-        a = side.select(
-            F.col("id").alias("doc_a"), "shingle",
-            F.col("n").alias("na"), F.col("pos").alias("pa"),
-        )
-        b = side.select(
-            F.col("id").alias("doc_b"), "shingle",
-            F.col("n").alias("nb"), F.col("pos").alias("pb"),
-        )
-        # POSITIONAL filter (PPJoin's second exact prune), aggregated
-        # per pair over the COLD matches the join sees. Shared shingles
-        # decompose exactly into three classes, each bounded:
-        #   * cold prefix matches — counted by cp;
-        #   * HOT shingles in both prefixes — each is one of doc_a's hp
-        #     hot prefix entries AND one of doc_b's, so ≤ min(hp_a,
-        #     hp_b). (These can hash BELOW the largest cold match, so
-        #     the tail term never sees them — dropping this term
-        #     silently pruned hot-boilerplate near-dup clusters.)
-        #   * everything else is outside at least one prefix, hence (by
-        #     sortedness: prefixes are the smallest hashes) strictly
-        #     larger than the cold match at (ia, jb) in BOTH docs, so
-        #     drawn from both remaining tails: ≤ min(na - ia, nb - jb).
-        #     ia = max(pa) and jb = max(pb) are attained at the same
-        #     shingle because position is monotone in shingle order.
-        #     i_full ≤ cp + min(hp_a, hp_b) + min(na - ia, nb - jb)
-        # (clamped at min(na, nb) — the classes may overlap only in the
-        # direction that loosens, never misses). Only pairs whose bound
-        # still clears the threshold reach the rescore — at sf0.1 this
-        # cuts the 80k+ prefix-sharing pairs (short docs, weak
-        # size-ratio pruning) to the true near-dup shortlist before any
-        # full-array work.
-        cand = (
-            # shuffle-hash beats sort-merge here: both sides are narrow
-            # long-keyed rows and the per-partition sort would dominate
-            a.hint("shuffle_hash")
-            .join(b, ["shingle"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .filter(
-                F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-                >= threshold
-            )
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(
-                F.count(F.lit(1)).alias("cp"),
-                F.max("pa").alias("ia"),
-                F.max("pb").alias("jb"),
-            )
-            .join(
-                hp.select(F.col("id").alias("doc_a"), F.col("hp").alias("hp_a")),
-                ["doc_a"],
-                "left",
-            )
-            .join(
-                hp.select(F.col("id").alias("doc_b"), F.col("hp").alias("hp_b")),
-                ["doc_b"],
-                "left",
-            )
-        )
-        ub = F.least(
-            F.col("cp")
-            + F.least(
-                F.coalesce("hp_a", F.lit(0)), F.coalesce("hp_b", F.lit(0))
-            )
-            + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb")),
-            F.least("na", "nb"),
-        )
-        # The candidate join expands ~44 records per input row at
-        # corpus scale, but AQE sizes the pair-aggregate's reduce
-        # partitions from the join's READ bytes — at sf100 the
-        # under-provisioned reduces spilled 23 GB. A 16 MB advisory
-        # partition size fixes exactly that stage (measured 275→245 s)
-        # but is a tax on every other job, so it is scoped to THIS
-        # job: the eager checkpoint below materializes the candidate
-        # plan synchronously, and the conf is restored right after.
-        # KNOWN LIMIT (round-6 ADVICE): SQL conf is session-global, so
-        # a query another THREAD runs on the same session during this
-        # checkpoint briefly sees the 16 MB advisory size — a perf
-        # nuance, never a correctness one. Callers running dedup
-        # concurrently with latency-sensitive work should hand this
-        # operator its own spark.newSession() (per-session conf view).
-        _adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        spark = df.sparkSession
-        _adv_old = spark.conf.get(_adv_key, None)
-        spark.conf.set(_adv_key, str(16 << 20))
-        _obs_cand = Observation()
-        try:
-            pairs = (
-                cand.filter(
-                    ub.cast("double") / (F.col("na") + F.col("nb") - ub)
-                    >= threshold
-                ).select("doc_a", "doc_b", "na", "nb")
-            ).observe(  # shortlist size rides the checkpoint (§1.2)
-                _obs_cand, F.count(F.lit(1)).alias("c")
-            ).localCheckpoint(eager=True)  # tiny: the candidate shortlist
-        finally:
-            if _adv_old is None:
-                spark.conf.unset(_adv_key)
-            else:
-                spark.conf.set(_adv_key, _adv_old)
-        n_cand = int(_obs_cand.get["c"])
-        scored = _rescore_candidates(
-            base,
-            pairs,
-            base_shingles=arr_stats[1] if arr_stats is not None else None,
-        )
-    # single-pass global sort: the result is a near-dup shortlist, and
-    # orderBy's range-partition sampling would execute the rescore plan
-    # twice just to order it. repartition(1), NOT coalesce(1): coalesce
-    # propagates up to the previous shuffle boundary and collapsed the
-    # rescore's final aggregation into one task (measured 79 s — 20% of
-    # the sf100 wall — funnelling 93.6M partial-agg rows through a
-    # single core). The explicit exchange keeps the upstream at cluster
-    # width and moves only the post-filter shortlist. Gated on the
-    # OBSERVED candidate count (round-13 verdict #5): past
-    # SINGLE_SORT_MAX_ROWS the shortlist is no longer one-task-sized —
-    # a lazy checkpoint + orderBy keeps single execution (the sampling
-    # pass materializes the checkpoint; the sort re-reads its blocks)
-    # with a range-partitioned parallel sort. Rows and order identical.
-    out = scored.filter(F.col("jaccard") >= threshold)
-    if n_cand <= SINGLE_SORT_MAX_ROWS:
-        return out.repartition(1).sortWithinPartitions(
-            "doc_a", "doc_b", "jaccard"
-        )
-    return out.localCheckpoint(eager=False).orderBy(
-        "doc_a", "doc_b", "jaccard"
+    return _ngram_jaccard_pairs_delta(
+        df, against, text_col, id_col, n, threshold, max_df,
+        against_arrays if delta else None, against_state, arrays,
     )
 
 
@@ -986,6 +716,7 @@ def _ngram_jaccard_pairs_delta(
     max_df: int | None,
     corpus_arrays: DataFrame | None,
     state: dict | None = None,
+    arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Delta-vs-corpus n-gram Jaccard: pairs touching the delta only.
 
@@ -1002,6 +733,14 @@ def _ngram_jaccard_pairs_delta(
     delta-corpus pairs are enumerated once (ids are side-disjoint by
     contract) and canonicalized by swapping the per-side stats.
 
+    With no corpus (``corpus``, ``corpus_arrays`` and ``state`` all
+    None) every doc is a delta doc, every pair touches the delta, and
+    the body IS the self-join ``ngram_jaccard_pairs(new)``: no
+    corpus-side relation is built, unioned, shingled or sized.
+    ``arrays``: the caller's checkpointed delta-side
+    ``shingle_arrays`` relation (capped path; see
+    ``ngram_jaccard_pairs``) — used instead of shingling ``new``.
+
     ``state`` (from ``read_text_dedup_state_full``) supplies the FULL
     persisted serving layout: with prefix_df/hp0 present and the
     spec matching (n, threshold, max_df), the probe reconstructs the
@@ -1017,45 +756,46 @@ def _ngram_jaccard_pairs_delta(
     correction pass is skipped when no shingle tips (the common case:
     a 1% delta rarely moves a df across max_df). Output is pinned
     equal to the stateless probe (tests/test_incremental_dedup.py)."""
+    self_join = corpus is None and corpus_arrays is None and state is None
     state = state or {}
     if corpus_arrays is None:
         corpus_arrays = state.get("arrays")
-    if corpus is None and corpus_arrays is None:
+    if not self_join and corpus is None and corpus_arrays is None:
         raise ValueError(
             "delta probe needs `against` or a persisted state with "
             "arrays"
         )
     n_cand: int | None = None  # capped path observes the shortlist size
     if max_df is None:
-        if corpus is None:
+        if not self_join and corpus is None:
             raise ValueError(
                 "the uncapped (string-shingle) delta probe needs the "
                 "corpus text itself — persisted state serves the "
                 "capped path"
             )
         # uncapped reference plan, delta-anchored: only shingles of
-        # delta docs expand into pairs
-        sh_new = shingles(new, text_col, id_col, n).localCheckpoint(
+        # delta docs expand into pairs. The join + sizes reuse the
+        # shingles 3×; materialize the explode once — STRING shingles
+        # here: the uncapped path is the oracle-exact reference the
+        # hashed paths are pinned against
+        sh_all = shingles(new, text_col, id_col, n).localCheckpoint(
             eager=True
-        )
-        sh_corp = shingles(corpus, text_col, id_col, n).localCheckpoint(
-            eager=True
-        )
-        sh_all = sh_new.withColumn("__d", F.lit(True)).unionByName(
-            sh_corp.withColumn("__d", F.lit(False))
-        )
+        ).withColumn("__d", F.lit(True))
+        if not self_join:
+            sh_corp = shingles(corpus, text_col, id_col, n).localCheckpoint(
+                eager=True
+            )
+            sh_all = sh_all.unionByName(sh_corp.withColumn("__d", F.lit(False)))
         sizes = sh_all.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-        a = _wide_by(sh_new, "shingle").select(
-            F.col("id").alias("ia"), "shingle"
-        )
-        b = sh_all.select(F.col("id").alias("ib"), "shingle", "__d")
+        # pair expansion is the hot stage — run it at cluster width even
+        # when the session's shuffle sizing collapsed reduces to 1
+        # partition; one exchange of the union feeds both join sides
+        side = _wide_by(sh_all, "shingle")
+        a = side.filter(F.col("__d")).select(F.col("id").alias("ia"), "shingle")
+        b = side.select(F.col("id").alias("ib"), "shingle", "__d")
         inter = (
             a.join(b, ["shingle"])
-            # delta-delta once via a<b; delta-corpus once by disjointness
-            .filter(
-                (F.col("ia") != F.col("ib"))
-                & (~F.col("__d") | (F.col("ia") < F.col("ib")))
-            )
+            .filter(_delta_pair("ia", "ib", "__d"))
             .select(
                 F.least("ia", "ib").alias("doc_a"),
                 F.greatest("ia", "ib").alias("doc_b"),
@@ -1072,35 +812,44 @@ def _ngram_jaccard_pairs_delta(
                 sizes.select(F.col("id").alias("doc_b"), F.col("n").alias("nb")),
                 ["doc_b"],
             )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(
-                    F.col("inter").cast("double")
-                    / (F.col("na") + F.col("nb") - F.col("inter")),
-                    6,
-                ).alias("jaccard"),
-            )
+            .select("doc_a", "doc_b", _jaccard("inter"))
         )
     else:
-        # prefix-filtered delta probe: the PPJoin-family machinery of
-        # the self-join (see ngram_jaccard_pairs inline comments for
-        # the prefix/positional/hot-valve proofs — unchanged here),
-        # with the a-side restricted to delta prefixes
-        new_ck = CkArrays(shingle_arrays(new, text_col, id_col, n))
-        arr_new = new_ck.df
-        if corpus_arrays is None:
-            corpus_arrays = ck_shingle_arrays(corpus, text_col, id_col, n)
-        corpus_stats = _arr_stats(corpus_arrays)
-        corpus_arr = _arr_df(corpus_arrays)
-        arr = arr_new.select("id", "g").withColumn(
-            "__d", F.lit(True)
-        ).unionByName(
-            corpus_arr.select("id", "g").withColumn("__d", F.lit(False))
-        )
-        base = arr.select("id", "g", "__d", F.size("g").alias("n")).filter(
-            F.col("n") > 0
-        )
+        # PREFIX-FILTERED set-similarity join (exact; the prefix
+        # principle of the public set-similarity-join literature,
+        # PPJoin-family): J(A,B) ≥ t implies |A∩B| ≥ ⌈t·|A|⌉ and
+        # ⌈t·|B|⌉, so under ANY shared global total order on shingles
+        # the two docs' (⌊(1-t)·|d|⌋+1)-prefixes of their sorted
+        # shingle sets must intersect. Candidate generation therefore
+        # indexes ONLY the prefix — ~(1-t) of each doc's shingles, 20%
+        # at t=0.8 — cutting the self-join pair blow-up by ~(1-t)²
+        # (≈25×) versus the full inverted index, at recall 1.0.
+        # The global order is the int64 shingle-hash order itself: it
+        # costs zero extra shuffles (one codegen array_sort per doc at
+        # materialization), where the literature's df-ascending order
+        # would need a document-frequency join plus a per-doc re-sort
+        # (two extra full-relation shuffles) to prune somewhat harder.
+        # All consumers read the one checkpointed array relation per
+        # side; the a-side of the candidate join holds delta prefixes.
+        if arrays is None:
+            arrays = ck_shingle_arrays(new, text_col, id_col, n)
+        arr_new = _arr_df(arrays)
+        new_stats = _arr_stats(arrays)
+        arr = arr_new.select("id", "g").withColumn("__d", F.lit(True))
+        base_shingles = new_stats[1] if new_stats is not None else None
+        if not self_join:
+            if corpus_arrays is None:
+                corpus_arrays = ck_shingle_arrays(corpus, text_col, id_col, n)
+            corpus_stats = _arr_stats(corpus_arrays)
+            arr = arr.unionByName(
+                _arr_df(corpus_arrays).select("id", "g")
+                .withColumn("__d", F.lit(False))
+            )
+            base_shingles = (
+                base_shingles + corpus_stats[1]
+                if corpus_stats is not None
+                else None
+            )
         spec = state.get("spec")
         serving = (
             spec is not None
@@ -1118,17 +867,7 @@ def _ngram_jaccard_pairs_delta(
                 f"(n={n}, threshold={threshold}, max_df={max_df}) — "
                 "rebuild the state or drop against_state"
             )
-        plen = (
-            F.floor(F.lit(1.0 - threshold) * F.col("n")) + 1
-        ).cast("int")
-        pre = base.select(
-            "id",
-            "n",
-            "__d",
-            F.posexplode(F.slice("g", F.lit(1), plen)).alias(
-                "pos", "shingle"
-            ),
-        ).withColumn("pos", F.col("pos") + 1)
+        pre = _prefix_relation(arr, threshold)
         if serving:
             # SERVING statistics: the same union hot/hp numbers, but
             # reconstructed from the persisted aggregates + delta-only
@@ -1206,25 +945,51 @@ def _ngram_jaccard_pairs_delta(
             # hot shingles and per-doc hot-prefix counts over the
             # UNION — the same statistics the self-join computes, so
             # the positional bound is numerically identical on every
-            # delta-touching pair
+            # delta-touching pair.
+            # max_df stays as the residual hot-key valve ON TOP of prefix
+            # filtering: a shingle hot even within the prefix index (>
+            # max_df prefix entries — ~(1-t)·df, so the valve engages ~5×
+            # later than the round-2..4 full-index cap) is dropped from
+            # candidate generation, bounding the hottest join key at
+            # max_df². A pair is missed only if EVERY shared prefix shingle
+            # is hot; the capped==uncapped pin and the driver's uncapped
+            # DuckDB oracle hold. The hot set is small by construction
+            # (≤ prefix_rows/max_df) and applied as a broadcast anti-join
+            # INSIDE the candidate job — a driver-side InSet probe was
+            # measured slower here: its blocking collect adds a whole extra
+            # job per invocation, ~0.4 s of the sf0.1 budget.
             hot = (
                 pre.groupBy("shingle")
                 .agg(F.count(F.lit(1)).alias("df"))
                 .filter(F.col("df") > max_df)
                 .select("shingle")
             )
+            # per-doc hot-prefix-entry counts: the positional bound below is
+            # computed over COLD matches only, so shared HOT prefix shingles
+            # (boilerplate common to a whole near-dup cluster) would be
+            # counted in neither cp nor the tails — the bound must carry a
+            # + min(hp_a, hp_b) correction or it undercounts and prunes
+            # true near-dups (pinned by the hot-boilerplate cluster test).
+            # Docs-with-hot-entries sized; joined unhinted (AQE broadcasts
+            # it when small, and an adversarial all-docs-share-boilerplate
+            # corpus would blow a forced broadcast).
             hp = (
                 pre.join(F.broadcast(hot), ["shingle"], "left_semi")
                 .groupBy("id")
                 .agg(F.count(F.lit(1)).alias("hp"))
             )
         cold = pre.join(F.broadcast(hot), ["shingle"], "left_anti")
-        # exchange floored by the DELTA prefix volume — the hinted
-        # build side here is the delta only, so the floor engages only
-        # for corpus-sized deltas (same hazard class as the self-join)
+        # prefix join, exchange floored by the SHJ build's bytes — the
+        # hinted build side is the DELTA prefix relation (the whole
+        # cold prefix relation in a self-join: at 5M docs, 32
+        # input-sized partitions aborted the unspillable hash build),
+        # so for a churn-sized delta the floor never engages; the
+        # size-ratio prune (exact: J ≥ t ⇒ min(na,nb)/max(na,nb) ≥ t)
+        # runs inside the join, before the distinct ever sees the
+        # blow-up
         side = _wide_by(
             cold, "shingle",
-            min_parts=_prefix_shj_parts(arr_new, threshold, new_ck.stats),
+            min_parts=_prefix_shj_parts(arr_new, threshold, new_stats),
         )
         a = side.filter(F.col("__d")).select(
             F.col("id").alias("ia"), "shingle",
@@ -1235,14 +1000,35 @@ def _ngram_jaccard_pairs_delta(
             F.col("n").alias("nB"), F.col("pos").alias("pB"), "__d",
         )
         swap = F.col("ia") > F.col("ib")
+        # POSITIONAL filter (PPJoin's second exact prune), aggregated
+        # per pair over the COLD matches the join sees. Shared shingles
+        # decompose exactly into three classes, each bounded:
+        #   * cold prefix matches — counted by cp;
+        #   * HOT shingles in both prefixes — each is one of doc_a's hp
+        #     hot prefix entries AND one of doc_b's, so ≤ min(hp_a,
+        #     hp_b). (These can hash BELOW the largest cold match, so
+        #     the tail term never sees them — dropping this term
+        #     silently pruned hot-boilerplate near-dup clusters.)
+        #   * everything else is outside at least one prefix, hence (by
+        #     sortedness: prefixes are the smallest hashes) strictly
+        #     larger than the cold match at (ia, jb) in BOTH docs, so
+        #     drawn from both remaining tails: ≤ min(na - ia, nb - jb).
+        #     ia = max(pa) and jb = max(pb) are attained at the same
+        #     shingle because position is monotone in shingle order.
+        #     i_full ≤ cp + min(hp_a, hp_b) + min(na - ia, nb - jb)
+        # (clamped at min(na, nb) — the classes may overlap only in the
+        # direction that loosens, never misses). Only pairs whose bound
+        # still clears the threshold reach the rescore — at sf0.1 this
+        # cuts the 80k+ prefix-sharing pairs (short docs, weak
+        # size-ratio pruning) to the true near-dup shortlist before any
+        # full-array work.
         cand = (
+            # shuffle-hash beats sort-merge here: both sides are narrow
+            # long-keyed rows and the per-partition sort would dominate;
             # the delta side is the small build relation
             a.hint("shuffle_hash")
             .join(b, ["shingle"])
-            .filter(
-                (F.col("ia") != F.col("ib"))
-                & (~F.col("__d") | (F.col("ia") < F.col("ib")))
-            )
+            .filter(_delta_pair("ia", "ib", "__d"))
             .filter(
                 F.least("nA", "nB").cast("double") / F.greatest("nA", "nB")
                 >= threshold
@@ -1281,29 +1067,57 @@ def _ngram_jaccard_pairs_delta(
             + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb")),
             F.least("na", "nb"),
         )
+        # The candidate join expands ~44 records per input row at
+        # corpus scale, but AQE sizes the pair-aggregate's reduce
+        # partitions from the join's READ bytes — at sf100 the
+        # under-provisioned reduces spilled 23 GB. A 16 MB advisory
+        # partition size fixes exactly that stage (measured 275→245 s)
+        # but is a tax on every other job, so it is scoped to THIS
+        # job: the eager checkpoint below materializes the candidate
+        # plan synchronously, and the conf is restored right after.
+        # KNOWN LIMIT (round-6 ADVICE): SQL conf is session-global, so
+        # a query another THREAD runs on the same session during this
+        # checkpoint briefly sees the 16 MB advisory size — a perf
+        # nuance, never a correctness one. Callers running dedup
+        # concurrently with latency-sensitive work should hand this
+        # operator its own spark.newSession() (per-session conf view).
+        _adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        spark = new.sparkSession
+        _adv_old = spark.conf.get(_adv_key, None)
+        spark.conf.set(_adv_key, str(16 << 20))
         _obs_cand = Observation()
-        pairs = (
-            cand.filter(
-                ub.cast("double") / (F.col("na") + F.col("nb") - ub)
-                >= threshold
-            ).select("doc_a", "doc_b", "na", "nb")
-        ).observe(  # shortlist size rides the checkpoint (§1.2)
-            _obs_cand, F.count(F.lit(1)).alias("c")
-        ).localCheckpoint(eager=True)  # tiny: the candidate shortlist
+        try:
+            pairs = (
+                cand.filter(
+                    ub.cast("double") / (F.col("na") + F.col("nb") - ub)
+                    >= threshold
+                ).select("doc_a", "doc_b", "na", "nb")
+            ).observe(  # shortlist size rides the checkpoint (§1.2)
+                _obs_cand, F.count(F.lit(1)).alias("c")
+            ).localCheckpoint(eager=True)  # tiny: the candidate shortlist
+        finally:
+            if _adv_old is None:
+                spark.conf.unset(_adv_key)
+            else:
+                spark.conf.set(_adv_key, _adv_old)
         n_cand = int(_obs_cand.get["c"])
-        scored = _rescore_candidates(
-            base,
-            pairs,
-            base_shingles=(
-                new_ck.stats[1] + corpus_stats[1]
-                if corpus_stats is not None
-                else None
-            ),
-        )
-    # same sort-plan gate as the self-join path (round-13 verdict #5);
-    # the uncapped reference branch has no observed shortlist size
-    # (n_cand None) and keeps its standing single-task sort — it is
-    # the small-scale oracle-exact plan by contract
+        scored = _rescore_candidates(arr, pairs, base_shingles=base_shingles)
+    # single-pass global sort: the result is a near-dup shortlist, and
+    # orderBy's range-partition sampling would execute the rescore plan
+    # twice just to order it. repartition(1), NOT coalesce(1): coalesce
+    # propagates up to the previous shuffle boundary and collapsed the
+    # rescore's final aggregation into one task (measured 79 s — 20% of
+    # the sf100 wall — funnelling 93.6M partial-agg rows through a
+    # single core). The explicit exchange keeps the upstream at cluster
+    # width and moves only the post-filter shortlist. Gated on the
+    # OBSERVED candidate count (round-13 verdict #5): past
+    # SINGLE_SORT_MAX_ROWS the shortlist is no longer one-task-sized —
+    # a lazy checkpoint + orderBy keeps single execution (the sampling
+    # pass materializes the checkpoint; the sort re-reads its blocks)
+    # with a range-partitioned parallel sort. Rows and order identical.
+    # The uncapped reference branch has no observed shortlist size
+    # (n_cand None) and keeps the single-task sort — it is the
+    # small-scale oracle-exact plan by contract.
     out = scored.filter(F.col("jaccard") >= threshold)
     if n_cand is None or n_cand <= SINGLE_SORT_MAX_ROWS:
         return out.repartition(1).sortWithinPartitions(
@@ -1480,7 +1294,7 @@ def minhash_lsh_pairs(
     verify leg semi-joins it on the candidate ids instead of
     re-scanning and re-shingling the corpus text.
 
-    Plan: signatures (narrow) → band hashes → explode → self-join on
+    Plan: signatures (narrow) → band hashes → explode → join on
     (band_idx, band_hash) → distinct candidates → exact Jaccard on the
     candidate set only. With 16 bands × 4 rows the candidate probability
     at j=0.8 is 1-(1-0.8^4)^16 ≈ 0.9997.
@@ -1500,103 +1314,24 @@ def minhash_lsh_pairs(
     (``read_text_dedup_state_full``) adds the persisted BAND relation —
     the corpus then pays zero per-run band hashing too, its only
     per-run costs the banded-parquet stream through the candidate join
-    and the candidate-pruned signature reads.
+    and the candidate-pruned signature reads. Without a corpus the same
+    body runs with every doc on the delta side: that IS the self-join.
     """
+    delta = against is not None or against_state is not None
     if arrays is not None:
-        if against is not None or against_state is not None:
+        if delta:
             raise ValueError(
                 "arrays= applies to the self-join only; the delta form "
                 "takes the corpus relations via against_arrays= / "
                 "against_sigs= / against_state="
             )
         _check_arrays_contract(arrays, text_col, id_col, n)
-    if against is not None or against_state is not None:
-        return _minhash_lsh_pairs_delta(
-            df, against, text_col, id_col, n, num_hashes, bands,
-            threshold, against_arrays, against_sigs, against_state,
-        )
-    # The signature table is the cache unit (one 64-long row per doc,
-    # consumed by banding + the est join twice). The shingle relation
-    # is never exploded at all — signatures come from the per-doc
-    # array form via the vectorized permutation sweep
-    # (_signatures_from_arrays), zero shuffle; the verify leg
-    # re-shingles only the candidate docs.
-    arrays = _arr_df(arrays) if arrays is not None else None
-    sigs = _signatures_from_arrays(
-        arrays if arrays is not None
-        else shingle_arrays(df, text_col, id_col, n),
-        num_hashes,
-    ).localCheckpoint(eager=True)
-    banded = _wide_by(
-        _band_relation(sigs, num_hashes, bands), "band_idx", "band_hash"
+    return _minhash_lsh_pairs_delta(
+        df, against, text_col, id_col, n, num_hashes, bands, threshold,
+        against_arrays if delta else None,
+        against_sigs if delta else None,
+        against_state, arrays,
     )
-    _obs_cand = Observation()
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_idx", "band_hash"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("doc_a"), F.col("y.id").alias("doc_b"))
-        .distinct()
-    ).observe(  # shortlist size rides the checkpoint (§1.2)
-        _obs_cand, F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)  # the near-dup candidate shortlist
-    est = (
-        cand.join(sigs.select(F.col("id").alias("doc_a"), F.col("sig").alias("sig_a")), ["doc_a"])
-        .join(sigs.select(F.col("id").alias("doc_b"), F.col("sig").alias("sig_b")), ["doc_b"])
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-                    )
-                ).cast("double")
-                / num_hashes,
-                6,
-            ).alias("est_jaccard"),
-        )
-    )
-    # exact verification over CANDIDATE DOCS' shingles only: the whole
-    # point of LSH is that the verify join must not touch the full
-    # inverted index — re-shingle just the docs appearing in a
-    # candidate pair (their complete shingle sets, so Jaccard values
-    # are unchanged). Shingling is a narrow per-row transform, so
-    # running it a second time over the candidate subset is linear in
-    # candidate volume. The arrays stay arrays end-to-end:
-    # _pair_jaccard_arrays joins one wide row per pair side and
-    # intersects in codegen — no exploded relation, no re-aggregation.
-    cand_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .union(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    # checkpointed: consumed twice (both pair-join sides) and
-    # candidate-volume-sized by construction. With a caller-supplied
-    # array relation the candidate arrays are a semi-join of it — no
-    # second pass over the corpus text at all.
-    if arrays is not None:
-        arrs_cand = arrays.join(
-            cand_ids.withColumnRenamed(id_col, "id"), ["id"], "left_semi"
-        ).localCheckpoint(eager=True)
-    else:
-        arrs_cand = shingle_arrays(
-            df.join(cand_ids, [id_col], "left_semi"), text_col, id_col, n
-        ).localCheckpoint(eager=True)
-    exact = _pair_jaccard_arrays(arrs_cand, cand)
-    out = (
-        est.join(exact, ["doc_a", "doc_b"])
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard", "jaccard")
-    )
-    # trailing sort (round-14, same gate class as ngram_jaccard_pairs):
-    # orderBy's range-sampling re-executes the est/exact joins — both
-    # checkpoint-bounded, harmless on a shortlist; past
-    # SINGLE_SORT_MAX_ROWS candidates the lazy checkpoint keeps single
-    # execution with a parallel sort. Rows and order identical.
-    if int(_obs_cand.get["c"]) <= SINGLE_SORT_MAX_ROWS:
-        return out.orderBy("doc_a", "doc_b")
-    return out.localCheckpoint(eager=False).orderBy("doc_a", "doc_b")
 
 
 def _minhash_lsh_pairs_delta(
@@ -1611,6 +1346,7 @@ def _minhash_lsh_pairs_delta(
     corpus_arrays: DataFrame | None,
     corpus_sigs: DataFrame | None,
     state: dict | None = None,
+    arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Delta-vs-corpus MinHash banding: delta band rows probe the
     union's band relation, so candidate expansion is linear in delta
@@ -1622,7 +1358,18 @@ def _minhash_lsh_pairs_delta(
     full ``state`` (persisted ``bands`` relation + matching spec) not
     even that — banding is a deterministic function of the signatures,
     so reading the persisted band rows is output-identical to
-    recomputing them (pinned)."""
+    recomputing them (pinned).
+
+    With no corpus (``corpus``, ``corpus_arrays``, ``corpus_sigs`` and
+    ``state`` all None) every doc is a delta doc and the body IS the
+    self-join ``minhash_lsh_pairs(new)``: the one band relation is both
+    join sides and nothing corpus-side is built or sized. ``arrays``:
+    the caller's checkpointed delta-side ``shingle_arrays`` relation
+    (see ``minhash_lsh_pairs``)."""
+    self_join = (
+        corpus is None and corpus_arrays is None and corpus_sigs is None
+        and state is None
+    )
     state = state or {}
     corpus_bands = None
     spec = state.get("spec")
@@ -1640,70 +1387,80 @@ def _minhash_lsh_pairs_delta(
                 "rebuild the state or drop against_state"
             )
         corpus_bands = state["bands"]
-    corpus_arrays = _arr_df(corpus_arrays) if corpus_arrays is not None else None
     if corpus_arrays is None:
         corpus_arrays = state.get("arrays")
     if corpus_sigs is None:
         corpus_sigs = state.get("sigs")
-    if corpus is None and (corpus_arrays is None or corpus_sigs is None):
+    if not self_join and corpus is None and (
+        corpus_arrays is None or corpus_sigs is None
+    ):
         raise ValueError(
             "delta probe needs `against` or a persisted state with "
             "arrays and sigs"
         )
-    arr_new = shingle_arrays(new, text_col, id_col, n).localCheckpoint(
-        eager=True
-    )
-    sigs_new = _signatures_from_arrays(arr_new, num_hashes).localCheckpoint(
-        eager=True
-    )
-    if corpus_arrays is None:
-        corpus_arrays = shingle_arrays(
-            corpus, text_col, id_col, n
-        ).localCheckpoint(eager=True)
-    if corpus_sigs is None:
-        corpus_sigs = _signatures_from_arrays(
-            corpus_arrays, num_hashes
-        ).localCheckpoint(eager=True)
-    sigs_all = sigs_new.select("id", "sig").withColumn(
-        "__d", F.lit(True)
-    ).unionByName(
-        corpus_sigs.select("id", "sig").withColumn("__d", F.lit(False))
-    )
-    banded_new = _band_relation(sigs_new, num_hashes, bands)
-    # nightly-batch fast path: a churn-sized delta's band rows broadcast
-    # (|delta|·bands skinny rows), so the CORPUS banded relation streams
-    # through the candidate join with ZERO shuffle — the corpus-side
-    # exchange (|corpus|·bands rows) was most of the first measured 5M
-    # probe wall. sigs_new is checkpointed, so the gate aggregate is
-    # cheap (and id-payload-aware — see _banded_broadcast_bytes).
-    if (
-        _banded_broadcast_bytes(
-            sigs_new.select("id"), "id", bands, 3
-        )
-        <= RESCORE_BROADCAST_MAX_BYTES
-    ):
-        banded_new = F.broadcast(banded_new)
-    else:
-        banded_new = _wide_by(banded_new, "band_idx", "band_hash")
-    if corpus_bands is not None:
-        # persisted corpus band rows stream verbatim; only the delta
-        # pays the band projection
-        banded_all = (
-            _band_relation(sigs_new, num_hashes, bands)
-            .withColumn("__d", F.lit(True))
-            .unionByName(corpus_bands.withColumn("__d", F.lit(False)))
+    # The signature table is the cache unit (one 64-long row per doc,
+    # consumed by banding + the est join twice). The shingle relation
+    # is never exploded at all — signatures come from the per-doc
+    # array form via the vectorized permutation sweep
+    # (_signatures_from_arrays), zero shuffle; neither side's arrays
+    # are checkpointed (corpus-sized in a self-join), and the verify
+    # leg below re-shingles only the candidate docs.
+    arr_new = _arr_df(arrays) if arrays is not None else None
+    sigs_new = _signatures_from_arrays(
+        arr_new if arr_new is not None
+        else shingle_arrays(new, text_col, id_col, n),
+        num_hashes,
+    ).localCheckpoint(eager=True)
+    sigs_all = sigs_new.select("id", "sig").withColumn("__d", F.lit(True))
+    if self_join:
+        # the one band relation is both sides of the candidate join
+        banded_new = banded_all = _wide_by(
+            _band_relation(sigs_all, num_hashes, bands),
+            "band_idx", "band_hash",
         )
     else:
-        banded_all = _band_relation(sigs_all, num_hashes, bands)
+        corpus_arrays = (
+            _arr_df(corpus_arrays) if corpus_arrays is not None else None
+        )
+        if corpus_sigs is None:
+            corpus_sigs = _signatures_from_arrays(
+                corpus_arrays if corpus_arrays is not None
+                else shingle_arrays(corpus, text_col, id_col, n),
+                num_hashes,
+            ).localCheckpoint(eager=True)
+        sigs_all = sigs_all.unionByName(
+            corpus_sigs.select("id", "sig").withColumn("__d", F.lit(False))
+        )
+        banded_new = _band_relation(sigs_new, num_hashes, bands)
+        # nightly-batch fast path: a churn-sized delta's band rows
+        # broadcast (|delta|·bands skinny rows), so the CORPUS banded
+        # relation streams through the candidate join with ZERO shuffle
+        # — the corpus-side exchange (|corpus|·bands rows) was most of
+        # the first measured 5M probe wall. sigs_new is checkpointed, so
+        # the gate aggregate is cheap (and id-payload-aware — see
+        # _banded_broadcast_bytes).
+        if (
+            _banded_broadcast_bytes(sigs_new.select("id"), "id", bands, 3)
+            <= RESCORE_BROADCAST_MAX_BYTES
+        ):
+            banded_new = F.broadcast(banded_new)
+        else:
+            banded_new = _wide_by(banded_new, "band_idx", "band_hash")
+        if corpus_bands is not None:
+            # persisted corpus band rows stream verbatim; only the delta
+            # pays the band projection
+            banded_all = (
+                _band_relation(sigs_new, num_hashes, bands)
+                .withColumn("__d", F.lit(True))
+                .unionByName(corpus_bands.withColumn("__d", F.lit(False)))
+            )
+        else:
+            banded_all = _band_relation(sigs_all, num_hashes, bands)
     _obs_cand = Observation()
     cand = (
         banded_all.alias("y")
         .join(banded_new.alias("x"), ["band_idx", "band_hash"])
-        # delta-delta once via a<b; delta-corpus once by disjointness
-        .filter(
-            (F.col("x.id") != F.col("y.id"))
-            & (~F.col("y.__d") | (F.col("x.id") < F.col("y.id")))
-        )
+        .filter(_delta_pair("x.id", "y.id", "y.__d"))
         .select(
             F.least(F.col("x.id"), F.col("y.id")).alias("doc_a"),
             F.greatest(F.col("x.id"), F.col("y.id")).alias("doc_b"),
@@ -1712,18 +1469,23 @@ def _minhash_lsh_pairs_delta(
     ).observe(  # shortlist size rides the checkpoint (§1.2)
         _obs_cand, F.count(F.lit(1)).alias("c")
     ).localCheckpoint(eager=True)  # the near-dup candidate shortlist
-    # est/verify only ever touch CANDIDATE docs' signatures — prune the
-    # corpus-sized signature relation by the (checkpointed, small)
-    # candidate id set before joining, instead of shuffling 64-long
-    # signature rows for every corpus doc through both join sides
     cand_ids = (
         cand.select(F.col("doc_a").alias("id"))
         .union(cand.select(F.col("doc_b").alias("id")))
         .distinct()
-    ).localCheckpoint(eager=True)
-    sigs_flat = sigs_all.select("id", "sig").join(
-        F.broadcast(cand_ids), ["id"], "left_semi"
     )
+    if self_join:
+        sigs_flat = sigs_new
+    else:
+        # est/verify only ever touch CANDIDATE docs' signatures — prune
+        # the corpus-sized signature relation by the (checkpointed,
+        # small) candidate id set before joining, instead of shuffling
+        # 64-long signature rows for every corpus doc through both join
+        # sides
+        cand_ids = F.broadcast(cand_ids.localCheckpoint(eager=True))
+        sigs_flat = sigs_all.select("id", "sig").join(
+            cand_ids, ["id"], "left_semi"
+        )
     est = (
         cand.join(
             sigs_flat.select(F.col("id").alias("doc_a"), F.col("sig").alias("sig_a")),
@@ -1748,18 +1510,45 @@ def _minhash_lsh_pairs_delta(
             ).alias("est_jaccard"),
         )
     )
-    arrs_cand = (
-        arr_new.select("id", "g")
-        .unionByName(corpus_arrays.select("id", "g"))
-        .join(F.broadcast(cand_ids), ["id"], "left_semi")
-    ).localCheckpoint(eager=True)
-    exact = _pair_jaccard_arrays(arrs_cand, cand)
+
+    # exact verification over CANDIDATE DOCS' shingles only: the whole
+    # point of LSH is that the verify join must not touch the full
+    # inverted index — re-shingle just the docs appearing in a
+    # candidate pair (their complete shingle sets, so Jaccard values
+    # are unchanged). Shingling is a narrow per-row transform, so
+    # running it a second time over the candidate subset is linear in
+    # candidate volume; a side with a supplied array relation is a
+    # semi-join of it instead — no second pass over its text at all.
+    # The arrays stay arrays end-to-end: _pair_jaccard_arrays joins one
+    # wide row per pair side and intersects in codegen — no exploded
+    # relation, no re-aggregation.
+    def _cand_arrays(text: DataFrame, arrs: DataFrame | None) -> DataFrame:
+        if arrs is not None:
+            return arrs.select("id", "g").join(cand_ids, ["id"], "left_semi")
+        return shingle_arrays(
+            text.join(
+                cand_ids.withColumnRenamed("id", id_col), [id_col],
+                "left_semi",
+            ),
+            text_col, id_col, n,
+        )
+
+    arrs_cand = _cand_arrays(new, arr_new)
+    if not self_join:
+        arrs_cand = arrs_cand.unionByName(_cand_arrays(corpus, corpus_arrays))
+    # checkpointed: consumed twice (both pair-join sides) and
+    # candidate-volume-sized by construction
+    exact = _pair_jaccard_arrays(arrs_cand.localCheckpoint(eager=True), cand)
     out = (
         est.join(exact, ["doc_a", "doc_b"])
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard", "jaccard")
     )
-    # same trailing-sort gate as the self-join path (round-14)
+    # trailing sort (round-14, same gate class as ngram_jaccard_pairs):
+    # orderBy's range-sampling re-executes the est/exact joins — both
+    # checkpoint-bounded, harmless on a shortlist; past
+    # SINGLE_SORT_MAX_ROWS candidates the lazy checkpoint keeps single
+    # execution with a parallel sort. Rows and order identical.
     if int(_obs_cand.get["c"]) <= SINGLE_SORT_MAX_ROWS:
         return out.orderBy("doc_a", "doc_b")
     return out.localCheckpoint(eager=False).orderBy("doc_a", "doc_b")
@@ -2639,17 +2428,22 @@ def _write_embedding_spec(spark, path: str, spec: dict, n: int) -> None:
 
 
 def _prefix_relation(arr: DataFrame, threshold: float) -> DataFrame:
-    """The prefix index of an array relation (id, g): one row per
-    prefix entry — (id, n, pos, shingle), pos 1-based. The single
-    source of the prefix shape for the self-join, the delta probe, and
-    the persisted serving state (they must byte-agree)."""
-    base = arr.select("id", "g", F.size("g").alias("n")).filter(
+    """The prefix index of an array relation (id, g, [side flags]): one
+    row per prefix entry — (id, n, [side flags], pos, shingle). The
+    single source of the prefix shape for the pair probe and the
+    persisted serving state (they must byte-agree). posexplode: the
+    1-based prefix position feeds the probe's positional filter
+    (positions along the sorted array are monotone in the global
+    shingle order)."""
+    keep = [c for c in arr.columns if c not in ("id", "g")]
+    base = arr.select("id", "g", F.size("g").alias("n"), *keep).filter(
         F.col("n") > 0
     )
     plen = (F.floor(F.lit(1.0 - threshold) * F.col("n")) + 1).cast("int")
     return base.select(
         "id",
         "n",
+        *keep,
         F.posexplode(F.slice("g", F.lit(1), plen)).alias("pos", "shingle"),
     ).withColumn("pos", F.col("pos") + 1)
 
@@ -2783,45 +2577,11 @@ def simhash_pairs(
     to delta-touching pairs (banding is a deterministic per-doc
     function; pinned). ``against_bands`` supplies the persisted corpus
     band relation (``build_text_dedup_state``) so the corpus pays zero
-    per-run hashing.
+    per-run hashing. Without a corpus the same body runs with every doc
+    on the delta side: that IS the self-join.
     """
-    if against is not None or against_bands is not None:
-        return _simhash_pairs_delta(
-            df, against, text_col, id_col, max_hamming, against_bands
-        )
-    # band rows CARRY their doc's four band values so Hamming evaluates
-    # inline in the candidate join — candidates at 16-bit bands are
-    # collision-bound (~n²/2^16 per band), and distinct-ing then
-    # re-joining them against the doc-sized relation twice was measured
-    # 8.8× slower on the delta form's identical shape; the distinct
-    # runs AFTER the hamming filter, on the near-dup shortlist
-    sh = simhash_bands(df, text_col, id_col)
-    banded = _wide_by(
-        sh.select(
-            "id", "sh0", "sh1", "sh2", "sh3",
-            F.posexplode(F.array("sh0", "sh1", "sh2", "sh3")).alias(
-                "band_idx", "band_val"
-            ),
-        ),
-        "band_idx",
-        "band_val",
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"x.sh{i}").bitwiseXOR(F.col(f"y.sh{i}")))
-        for i in range(4)
-    )
-    return (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_idx", "band_val"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("doc_a"),
-            F.col("y.id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-        .orderBy("doc_a", "doc_b", "hamming")
+    return _simhash_pairs_delta(
+        df, against, text_col, id_col, max_hamming, against_bands
     )
 
 
@@ -2844,38 +2604,46 @@ def _simhash_pairs_delta(
     a 1% delta, and shuffling them twice against 5M-row sides was the
     wall). Hamming is symmetric and a pure pair function, so the
     post-filter distinct is exact. Output equals the self-join over
-    the union restricted to delta-touching pairs (the pytest pin)."""
-    sh_new = simhash_bands(new, text_col, id_col).localCheckpoint(
-        eager=True
-    )
-    if corpus_bands is None:
-        if corpus is None:
-            raise ValueError(
-                "delta probe needs `against` or a persisted state "
-                "with simhash bands"
-            )
-        corpus_bands = simhash_bands(corpus, text_col, id_col)
-    sh_all = sh_new.withColumn("__d", F.lit(True)).unionByName(
-        corpus_bands.select("id", "sh0", "sh1", "sh2", "sh3").withColumn(
-            "__d", F.lit(False)
-        )
-    )
-    band_arr = F.posexplode(F.array("sh0", "sh1", "sh2", "sh3")).alias(
-        "band_idx", "band_val"
-    )
+    the union restricted to delta-touching pairs (the pytest pin).
+
+    With no corpus (``corpus`` and ``corpus_bands`` both None) every
+    doc is a delta doc and the body IS the self-join
+    ``simhash_pairs(new)``: one band relation, shuffled once, is both
+    join sides. In a self-join too the candidates at 16-bit bands are
+    collision-bound (~n²/2^16 per band), so the inline Hamming keeps
+    the distinct AFTER the hamming filter, on the near-dup shortlist —
+    distinct-ing then re-joining them against the doc-sized relation
+    twice was measured 8.8× slower."""
     shs = ["sh0", "sh1", "sh2", "sh3"]
-    banded_new = sh_new.select("id", *shs, band_arr)
-    # churn-sized deltas broadcast their band rows (the corpus band
-    # relation then streams with zero shuffle — the minhash delta's
-    # measured gate); sh_new is checkpointed so the aggregate is cheap
-    if (
-        _banded_broadcast_bytes(sh_new.select("id"), "id", 4, 7)
-        <= RESCORE_BROADCAST_MAX_BYTES
-    ):
-        banded_new = F.broadcast(banded_new)
+    band_arr = F.posexplode(F.array(*shs)).alias("band_idx", "band_val")
+    sh_new = simhash_bands(new, text_col, id_col)
+    if corpus is None and corpus_bands is None:
+        banded_new = banded_all = _wide_by(
+            sh_new.withColumn("__d", F.lit(True)).select(
+                "id", "__d", *shs, band_arr
+            ),
+            "band_idx",
+            "band_val",
+        )
     else:
-        banded_new = _wide_by(banded_new, "band_idx", "band_val")
-    banded_all = sh_all.select("id", "__d", *shs, band_arr)
+        sh_new = sh_new.localCheckpoint(eager=True)
+        if corpus_bands is None:
+            corpus_bands = simhash_bands(corpus, text_col, id_col)
+        sh_all = sh_new.withColumn("__d", F.lit(True)).unionByName(
+            corpus_bands.select("id", *shs).withColumn("__d", F.lit(False))
+        )
+        banded_new = sh_new.select("id", *shs, band_arr)
+        # churn-sized deltas broadcast their band rows (the corpus band
+        # relation then streams with zero shuffle — the minhash delta's
+        # measured gate); sh_new is checkpointed so the aggregate is cheap
+        if (
+            _banded_broadcast_bytes(sh_new.select("id"), "id", 4, 7)
+            <= RESCORE_BROADCAST_MAX_BYTES
+        ):
+            banded_new = F.broadcast(banded_new)
+        else:
+            banded_new = _wide_by(banded_new, "band_idx", "band_val")
+        banded_all = sh_all.select("id", "__d", *shs, band_arr)
     hamming = sum(
         F.bit_count(
             F.col(f"x.sh{i}").bitwiseXOR(F.col(f"y.sh{i}"))
@@ -2885,11 +2653,7 @@ def _simhash_pairs_delta(
     return (
         banded_all.alias("y")
         .join(banded_new.alias("x"), ["band_idx", "band_val"])
-        # delta-delta once via a<b; delta-corpus once by disjointness
-        .filter(
-            (F.col("x.id") != F.col("y.id"))
-            & (~F.col("y.__d") | (F.col("x.id") < F.col("y.id")))
-        )
+        .filter(_delta_pair("x.id", "y.id", "y.__d"))
         .select(
             F.least(F.col("x.id"), F.col("y.id")).alias("doc_a"),
             F.greatest(F.col("x.id"), F.col("y.id")).alias("doc_b"),

@@ -606,13 +606,21 @@ def run_sync(
     # — raw, searchui AND the chunks table (a deleted doc's chunks must
     # leave search regardless of whether the ANN leg is configured;
     # round-11 ADVICE hoisted this out of the cfg.ann guard). The chunk
-    # ids are collected FIRST, ANN-gated — they are the index's stale-
-    # ledger bookkeeping and need the pre-delete table.
+    # ids are collected FIRST from the pre-delete table — they are the
+    # delete's key and the ANN index's stale-ledger bookkeeping.
     n_del = 0
     doomed_chunks = None
+    dd_batch = None
     if allowed and doomed is not None:
         n_del = doomed.count()
         if n_del:
+            if cfg.dedup is not None and n_norm:
+                # step 7's dedup delta is lazy over the raw files the
+                # raw delete below swaps — materialize it first, or the
+                # leg reads files that no longer exist
+                dd_batch = _sync_dedup_delta(
+                    searchui, cfg.dedup
+                ).localCheckpoint(eager=True)
             SK.delete_from_index(
                 spark, paths.raw, doomed, backend=cfg.state_backend
             )
@@ -620,19 +628,21 @@ def run_sync(
                 spark, paths.searchui, doomed, backend=cfg.state_backend
             )
             if paths.chunks and LK.table_exists(paths.chunks):
-                if cfg.ann is not None:
-                    doomed_chunks = (
-                        LK.read_table(spark, paths.chunks)
-                        .join(
-                            F.broadcast(doomed.select("id")), ["id"],
-                            "left_semi",
-                        )
-                        .select(cfg.ann.id_col)
-                        .localCheckpoint(eager=True)
+                # the chunks table is keyed by chunk_id: delete by the
+                # doomed docs' chunk ids (an id-keyed MOR tombstone
+                # matches no chunk row, leaving the chunks readable)
+                doomed_chunks = (
+                    LK.read_table(spark, paths.chunks)
+                    .join(
+                        F.broadcast(doomed.select("id")), ["id"],
+                        "left_semi",
                     )
+                    .select("chunk_id")
+                    .localCheckpoint(eager=True)
+                )
                 SK.delete_from_index(
-                    spark, paths.chunks, doomed.select("id"),
-                    key="id", backend=cfg.state_backend,
+                    spark, paths.chunks, doomed_chunks,
+                    key="chunk_id", backend=cfg.state_backend,
                 )
 
     _mark("searchui_merge_deletes")
@@ -644,13 +654,13 @@ def run_sync(
     # that no longer exist — ann_search excludes them until rebuild).
     ann: dict = {}
     if cfg.ann is not None and paths.chunks:
-        gone_chunks = doomed_chunks
-        if vanished_chunks is not None:
-            v = vanished_chunks.withColumnRenamed("chunk_id", cfg.ann.id_col)
-            gone_chunks = (
-                v if gone_chunks is None
-                else gone_chunks.unionByName(v)
-            )
+        gone_chunks = None
+        for c in (doomed_chunks, vanished_chunks):
+            if c is not None:
+                c = c.withColumnRenamed("chunk_id", cfg.ann.id_col)
+                gone_chunks = (
+                    c if gone_chunks is None else gone_chunks.unionByName(c)
+                )
         if chunks_batch is not None or gone_chunks is not None:
             ann = run_ann_maintenance(
                 spark, cfg.ann,
@@ -672,11 +682,11 @@ def run_sync(
                     else None
                 ),
             )
-            if doomed_chunks is not None:
-                from eea_crawler_spark.operators import dedup as _DD
-
-                _DD._release_local_checkpoint(doomed_chunks)
         _mark("ann_maintenance")
+    if doomed_chunks is not None:
+        from eea_crawler_spark.operators import dedup as _DD
+
+        _DD._release_local_checkpoint(doomed_chunks)
 
     # 7. dedup maintenance (opt-in): the incremental dedup family
     # composed as the post-merge leg — probe this run's changed docs
@@ -702,20 +712,10 @@ def run_sync(
         else:
             dd_col = _dedup_data_col(ddcfg)
             if n_norm:
-                if dd_col not in searchui.columns:
-                    # silently substituting an empty delta here would
-                    # let new docs bypass the probe AND the serving
-                    # state forever — unprobed duplicates with no
-                    # signal (round-10 ADVICE). Misconfiguration, not
-                    # a degradable condition: fail loudly.
-                    raise ValueError(
-                        f"SyncConfig.dedup is set (method="
-                        f"{ddcfg.method!r}) but the configured data "
-                        f"column {dd_col!r} is missing from the "
-                        f"normalized batch — fix the dedup config or "
-                        f"the normalizer output"
-                    )
-                delta_dd = searchui.select("id", dd_col)
+                delta_dd = (
+                    dd_batch if dd_batch is not None
+                    else _sync_dedup_delta(searchui, ddcfg)
+                )
             else:
                 # delete-only run (no normalized batch in scope): an
                 # empty delta typed like the persisted corpus — the id
@@ -754,6 +754,10 @@ def run_sync(
                     else None
                 ),
             )
+        if dd_batch is not None:
+            from eea_crawler_spark.operators import dedup as _DD
+
+            _DD._release_local_checkpoint(dd_batch)
         _mark("dedup_maintenance")
 
     SK.status_event(
@@ -1082,6 +1086,24 @@ def _dedup_state_exists(spark, dcfg: DedupConfig) -> bool:
 
     rel = "vectors" if dcfg.method == "embedding" else "arrays"
     return _try_read_parquet(spark, f"{dcfg.state_path}/{rel}") is not None
+
+
+def _sync_dedup_delta(searchui: DataFrame, dcfg: DedupConfig) -> DataFrame:
+    """run_sync's dedup-leg delta: the normalized batch's (id, data
+    column) pairs."""
+    dd_col = _dedup_data_col(dcfg)
+    if dd_col not in searchui.columns:
+        # silently substituting an empty delta here would let new docs
+        # bypass the probe AND the serving state forever — unprobed
+        # duplicates with no signal (round-10 ADVICE). Misconfiguration,
+        # not a degradable condition: fail loudly.
+        raise ValueError(
+            f"SyncConfig.dedup is set (method={dcfg.method!r}) but the "
+            f"configured data column {dd_col!r} is missing from the "
+            f"normalized batch — fix the dedup config or the normalizer "
+            f"output"
+        )
+    return searchui.select("id", dd_col)
 
 
 def _dedup_probe(delta, state, dcfg: DedupConfig, id_col: str) -> DataFrame:

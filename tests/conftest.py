@@ -22,3 +22,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SMOKE_SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter):
+    # a green default run covers only the fast set; say so in the tally
+    slow = [
+        it for it in terminalreporter.stats.get("deselected", [])
+        if it.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow lifecycle/e2e tests deselected — "
+            "run them with `pytest tests/ -m slow`"
+        )

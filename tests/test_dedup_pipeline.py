@@ -160,6 +160,21 @@ def test_sync_dedup_leg_e2e(spark, env):
     kept = {r["id"] for r in flagged.filter("keep").collect()}
     assert kept == {d(1), d(3), d(5), d(6), d(7)}
 
+    # run 6: a MIXED night — a new near-dup of cluster B arrives while
+    # a unique doc is deleted; the dedup leg's delta must survive the
+    # raw-table delete that runs before it
+    site._add(9, _title(_BASE_B, 2), modified="2024-03-03")
+    del site.docs[d(6)]
+    r6 = run_sync(spark, cfg, paths, site)
+    assert r6["fetched"] == 1 and r6["deleted"] == 1
+    assert r6["dedup_pairs"] >= 1          # d9 paired with d3/d4
+    f6 = _flags(spark, dcfg)
+    assert f6[d(9)] == (d(3), False)       # joined cluster B, dropped
+    assert d(6) not in f6
+    assert {k: v for k, v in f6.items() if k != d(9)} == {
+        k: v for k, v in f5.items() if k != d(6)
+    }
+
 
 def test_dedup_leg_keep_by_quality(spark, env):
     """keep_by routes the winner choice through a searchui ranking

@@ -314,11 +314,18 @@ def test_mor_bucketed_base_parts_join_exchange_free(
     arbitrary id-keyed relation with ZERO state-side Exchange (only the
     other side shuffles into the bucket count) — the property the sync
     diff join rides (VERDICT r6 #1). Contrast-checked against a plain
-    scan of the same files, which pays two exchanges."""
+    scan of the same files, which pays two exchanges.
+
+    The bucket count is one more than the session's shuffle partitions,
+    so an exchange INTO the buckets can never be confused with a plain
+    exchange at the session default (on a 4-core host both were 4)."""
     monkeypatch.setattr(LK, "MOR_COMPACT_FRACTION", 1e9)
     path = str(tmp_path / "t")
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions")) + 1
     rows = [(f"k{i}", "v1", 1) for i in range(50)]
-    LK.merge_upsert(spark, path, _df(spark, rows), backend="mor", n_buckets=4)
+    LK.merge_upsert(
+        spark, path, _df(spark, rows), backend="mor", n_buckets=n_buckets
+    )
     LK.merge_upsert(spark, path, _df(spark, [("k1", "v2", 2)]), backend="mor")
     got = _rows(spark, path)
     assert got["k1"][0] == "v2" and len(got) == 50
@@ -334,13 +341,16 @@ def test_mor_bucketed_base_parts_join_exchange_free(
 
         def bucket_exchanges(df):
             """(state side bucketed?, exchanges INTO the bucket count).
-            The only exchange targeting 4 partitions is the non-bucketed
-            side being co-partitioned with the buckets; a tiny
-            segment-keys distinct inside the broadcast leg shuffles at
-            the session default and must not count."""
+            The only exchange targeting n_buckets partitions is the
+            non-bucketed side being co-partitioned with the buckets; a
+            tiny segment-keys distinct inside the broadcast leg shuffles
+            at the session default and must not count."""
             plan = df._jdf.queryExecution().executedPlan().toString()
             into_buckets = len(
-                re.findall(r"Exchange hashpartitioning\([^)]*, 4\)", plan)
+                re.findall(
+                    rf"Exchange hashpartitioning\([^)]*, {n_buckets}\)",
+                    plan,
+                )
             )
             return "Bucketed: true" in plan, into_buckets
 

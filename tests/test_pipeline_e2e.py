@@ -201,6 +201,32 @@ def test_embed_leg_writes_chunk_table(spark, paths, tmp_path):
     assert spark.read.parquet(paths.chunks).count() == 5
 
 
+def test_deleted_doc_chunks_leave_mor_chunk_table(spark, paths, tmp_path):
+    """On the merge-on-read layout a deleted doc's chunks must leave the
+    chunk_id-keyed chunks table — before and after compaction folds the
+    segments (an id-keyed tombstone matched no chunk row)."""
+    from eea_crawler_spark.sinks import lakehouse as LK
+
+    site = StubSite()
+    paths.chunks = str(tmp_path / "chunks")
+    cfg = SyncConfig(
+        site_url=SITE, site_id="eea", embed=True, state_backend="mor"
+    )
+    run_sync(spark, cfg, paths, site)
+    del site.docs[f"{SITE}/d4"]
+    assert run_sync(spark, cfg, paths, site)["deleted"] == 1
+
+    def chunk_docs():
+        return {
+            r["id"] for r in LK.read_table(spark, paths.chunks).collect()
+        }
+
+    want = {f"{SITE}/d{i}" for i in range(4)}
+    assert chunk_docs() == want
+    LK.compact_table(spark, paths.chunks)
+    assert chunk_docs() == want
+
+
 def test_sync_with_ported_eea_site_config(spark, paths):
     """The ported production site registry (config/sites.json) drives a
     sync end-to-end: config_eea's scrape + trafilatura selectors, the
